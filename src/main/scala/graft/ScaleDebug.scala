@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
 object ScaleDebug {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/scaledata/sf1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
@@ -142,7 +143,7 @@ object ScaleDebug {
       // clustering actually feeds these loops) plus one 2047-node
       // chain so star contraction's round count exercises its
       // log-diameter term, not just clique depth-1. Set
-      // GRAFT_CC_DEBUG/GRAFT_PR_DEBUG for per-round times — flat
+      // GRAFT_CC_DEBUG for per-round times — flat
       // per-round cost is the checkpointFresh stats-reset claim at
       // 2-3x the shipped loops' round counts; round counts staying
       // near the sf1 measurements (6 cc / 17-47 pr) is the
@@ -609,9 +610,8 @@ object ScaleDebug {
       // converge2 but not its step body or stop scale. Same edge set as
       // synthfix (520k 11-cliques + one 2047-chain = 28.6M edges); seeds
       // are doc_id % 10 == 0, ~10% of nodes, exactly the shipped rule.
-      // Set GRAFT_PR_DEBUG=1 for per-round deltas; the claim under test
-      // is round count ≪ PPR_CAP=80 (mixing-bound, graph-size-free) and
-      // flat per-round cost.
+      // The claim under test is round count ≪ PPR_CAP=80 (mixing-bound,
+      // graph-size-free) and flat per-round cost.
       val nc = args.lift(2).map(_.toInt).getOrElse(520000)
       val k = 11
       val ij = spark.range(k).select(col("id").as("i"))
@@ -630,11 +630,71 @@ object ScaleDebug {
       time("ppr count")(println("  ppr nodes=" + pr.count()))
       spark.stop(); return
     }
+    if (args.lift(1).contains("loopside")) {
+      // The measurement behind Fixpoint.DRIVER_MAX_PAIRS: q104's
+      // pagerank, q158's PPR and q149's k-core with each side forced,
+      // on synthetic graphs of `nc` blocks (comma-separated list) or,
+      // given "sf", on the similarity graph of `dir`. A block is an
+      // 11-clique with a 4-node pendant chain: 59 pairs, 15 nodes, a
+      // 5-round k=2 peel. The input is materialized first, so a time is
+      // the loop alone: the driver side's collect and kernel, or the
+      // distributed side's rounds. Both sides' rows must be equal. One
+      // warm-up pass on the first graph.
+      import graft.queries.{Components, Fixpoint, TextOps}
+      import org.apache.spark.sql.DataFrame
+      import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+      import org.apache.spark.util.SizeEstimator
+      def blocks(nc: Int): DataFrame = {
+        val clique = spark.range(11).select(col("id").as("i"))
+          .crossJoin(spark.range(11).select(col("id").as("j")))
+          .where(col("i") < col("j"))
+        val chain = spark.range(10, 14)
+          .select(col("id").as("i"), (col("id") + 1).as("j"))
+        spark.range(nc).select((col("id") * 15).as("b"))
+          .crossJoin(clique.unionByName(chain))
+          .select((col("b") + col("i")).as("u"), (col("b") + col("j")).as("v"))
+      }
+      val graphs: Seq[() => DataFrame] = args.lift(2) match {
+        case Some("sf") => Seq(() => TextOps.jaccardPairs(spark, dir)
+          .select(col("da").as("u"), col("db").as("v")))
+        case sizes => sizes.getOrElse("500,5000,50000").split(",")
+          .map(nc => () => blocks(nc.toInt)).toSeq
+      }
+      val loops = Seq[(String, DataFrame => DataFrame)](
+        "q104 pagerank" -> (e => TextOps.pageRankConverged(e)),
+        "q158 ppr" -> (e => TextOps.pprConverged(e)),
+        "q149 kcore" ->
+          (e => Components.kCore(e, TextOps.KCORE_K, TextOps.KCORE_CAP)))
+      val sides = Seq("driver" -> Long.MaxValue, "distributed" -> -1L)
+      for ((graph, pass) <- (graphs.head +: graphs).zipWithIndex) {
+        val edges = graph().localCheckpoint()
+        val pairs = edges.count()
+        for ((name, loop) <- loops) {
+          val got = sides.map { case (side, limit) =>
+            val t0 = System.nanoTime
+            val out = Fixpoint.driverMaxPairs.withValue(limit)(loop(edges))
+            val rows = out.collect().map(_.toSeq)
+              .sortBy(_.head.asInstanceOf[Long])
+            val secs = (System.nanoTime - t0) / 1e9
+            // the driver side's output rows, as held by its LocalRelation
+            val held = out.queryExecution.analyzed.collectLeaves().collect {
+              case l: LocalRelation => SizeEstimator.estimate(l.data)
+            }.sum
+            val label = if (pass == 0) "warm-up" else s"pairs=$pairs"
+            println(f"[loopside] $label%s $name%s $side%s $secs%.2f s " +
+              f"rows=${rows.length}%d output_bytes=$held%d")
+            rows.toSeq
+          }
+          println(s"[loopside] $name sides equal: ${got.distinct.size == 1}")
+        }
+        edges.unpersist()
+      }
+      spark.stop(); return
+    }
     if (args.lift(1).contains("pagerank")) {
-      // One full q104 run (set GRAFT_PR_DEBUG=1 for per-round deltas):
-      // confirms the convergence loop lands under PR_CAP at this scale
-      // (iteration count is ~scale-free: both the initial delta and the
-      // relative tolerance scale as 1/n).
+      // One full q104 run: confirms the convergence loop lands under
+      // PR_CAP at this scale (iteration count is ~scale-free: both the
+      // initial delta and the relative tolerance scale as 1/n).
       time("q104 converged")(
         graft.queries.TextOps.queries("q104_pagerank")(spark, dir)
           .write.format("noop").mode("overwrite").save())

@@ -1,7 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import Lineage.LineageOps
 
 /** Connected components over an undirected edge list — the cluster-
@@ -248,37 +250,43 @@ object Components {
     * q148 (closure): pendant chains of drifting revisions peel away,
     * boilerplate cliques survive as cores.
     *
-    * Plan per round: one degree aggregate over the undirected view
+    * Convergence = edge COUNT unchanged, which on a deletion-only loop
+    * is a proof, not a heuristic (equal cardinality of nested sets
+    * forces equality) — so the loop always ends with one confirming
+    * round that deletes nothing. Round count = peel depth + 1; a path is
+    * the worst case (length/2 rounds for k=2) and the `cap` fails loudly
+    * rather than returning a half-peeled subgraph (the r4 components
+    * lesson). Output: (doc_id, core_deg) for the core's nodes — degrees
+    * WITHIN the core, each ≥ k by construction.
+    *
+    * Side selection ([[Fixpoint.onDriver]]) on the normalized edge
+    * count the loop takes anyway: an edge list of at most
+    * [[Fixpoint.DRIVER_MAX_PAIRS]] rows is collected once and peeled on
+    * arrays in the driver ([[kCoreCollected]]); a larger one peels as
+    * Spark jobs. Per
+    * distributed round: one degree aggregate over the undirected view
     * (shuffle on node id) and two LEFT SEMI joins re-filtering the edge
     * list (shuffles on u, then v) — all over a monotonically SHRINKING
     * edge set; the `alive` frame is lazily checkpointed because both
-    * semi joins read it. Convergence = edge COUNT unchanged, which on a
-    * deletion-only loop is a proof, not a heuristic (equal cardinality
-    * of nested sets forces equality), so the per-round action is a bare
-    * count. Round count = peel depth; a path is the worst case
-    * (length/2 rounds for k=2) and the `cap` fails loudly rather than
-    * returning a half-peeled subgraph (the r4 components lesson).
-    * Carried state routes through [[Fixpoint.checkpointRound]]: plan
-    * stats stay bounded at any depth, rounds stay exchange-free between
-    * the amortized resets. Output: (doc_id, core_deg) for the core's
-    * nodes — degrees WITHIN the core, each ≥ k by construction. */
+    * semi joins read it, the per-round action is a bare count, and the
+    * carried state routes through [[Fixpoint.checkpointRound]] so plan
+    * stats stay bounded at any depth. */
   private[graft] def kCore(pairs: DataFrame, k: Int, cap: Int): DataFrame = {
     var edges = Fixpoint.checkpointFresh(pairs
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"))
       .where(col("u") =!= col("v"))
       .distinct())
-    val dbg = sys.env.contains("GRAFT_KCORE_DEBUG")
-    val tInit = System.nanoTime
-    var n = edges.count()
-    if (dbg) println(f"[kcore] init: $n%d edges materialized " +
-      f"${(System.nanoTime - tInit) / 1e9}%.1f s")
+    var n = Lineage.rowCount(edges)
+    def coreDegrees(e: DataFrame) = undirected(e)
+      .groupBy(col("u").as("doc_id")).agg(count(lit(1)).as("core_deg"))
+    if (Fixpoint.onDriver(n))
+      return kCoreCollected(edges, k, cap, coreDegrees(edges).schema)
     var round = 0
     var converged = n == 0L
     while (!converged) {
       round += 1
       require(round <= cap, s"kCore: still peeling after $cap rounds")
-      val t0 = System.nanoTime
       val alive = undirected(edges)
         .groupBy(col("u").as("x")).agg(count(lit(1)).as("d"))
         .where(col("d") >= k)
@@ -289,15 +297,39 @@ object Components {
           .join(alive.select(col("x").as("v")), Seq("v"), "left_semi")
           .select("u", "v"), round)
       val m = next.count()
-      if (dbg) println(f"[kcore] round $round: edges $n%d -> $m%d " +
-        f"${(System.nanoTime - t0) / 1e9}%.1f s")
       converged = m == n
       n = m
       edges = next
     }
-    if (dbg) println(s"[kcore] loop done @${System.currentTimeMillis / 1000}")
-    undirected(edges)
-      .groupBy(col("u").as("doc_id")).agg(count(lit(1)).as("core_deg"))
+    coreDegrees(edges)
+  }
+
+  /** kCore's small-graph side: the same parallel peel, round count, cap
+    * check and output over the collected normalized edge list, as a
+    * LocalRelation with `schema` (the distributed output's). */
+  private def kCoreCollected(edges: DataFrame, k: Int, cap: Int,
+      schema: StructType): DataFrame = {
+    val g = Fixpoint.collectPairs(edges.select("u", "v"))
+    val d = new Array[Int](g.ids.length)
+    def degrees(live: Array[Int]): Unit = {
+      java.util.Arrays.fill(d, 0)
+      for (e <- live) { d(g.a(e)) += 1; d(g.b(e)) += 1 }
+    }
+    var live = Array.range(0, g.size)
+    var round = 0
+    var converged = live.isEmpty
+    while (!converged) {
+      round += 1
+      require(round <= cap, s"kCore: still peeling after $cap rounds")
+      degrees(live)
+      val next = live.filter(e => d(g.a(e)) >= k && d(g.b(e)) >= k)
+      converged = next.length == live.length
+      live = next
+    }
+    degrees(live)
+    val out = g.ids.indices.filter(d(_) > 0)
+      .map(x => Row(g.ids(x), d(x).toLong))
+    edges.sparkSession.createDataFrame(out.asJava, schema)
   }
 
   /** BFS hop-distance layers from a seed set (q172) — the expansion-wave

@@ -3,8 +3,30 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import Lineage.LineageOps
 
-/** Shared helper for driver-paced fixpoint loops (q104 pagerank, q65
-  * star contraction, q143 BPE training): materialize a round's state
+/** Shared helpers for driver-paced fixpoint loops (q104 pagerank, q158
+  * personalized pagerank, q149 k-core, q65 star contraction, q143 BPE
+  * training).
+  *
+  * SIDE SELECTION. The pagerank, PPR and k-core loops run on one of two
+  * sides, picked once per call by [[onDriver]]:
+  *  - small graph: [[collectPairs]] collects the materialized pair list
+  *    once into primitive arrays, and the loop iterates on them in the
+  *    driver, returning a `LocalRelation` with the distributed side's
+  *    columns and types. The arithmetic is the same integer floor
+  *    division, so the results are bit-identical and a query pays one
+  *    collect instead of ~20–45 near-empty jobs;
+  *  - everything else: the distributed loop below, one Spark job per
+  *    round (or per unrolled stride), with the checkpoint cadence of
+  *    [[checkpointRound]].
+  * The gate reads a row count the loop takes anyway, from the job that
+  * materializes its input (k-core's normalized edge count, pagerank's
+  * and PPR's pair count), and compares it with [[DRIVER_MAX_PAIRS]].
+  * It is a fixed pair count, not a byte estimate tied to a Spark
+  * setting, so tuning a join knob never moves a loop between sides.
+  * Plan statistics cannot serve as the gate: [[checkpointFresh]] resets
+  * them to defaults.
+  *
+  * CHECKPOINT CADENCE (distributed side): materialize a round's state
   * AND cut the plan-statistics lineage.
   *
   * Why the second half matters (round-9 finding, caught by jstack on a
@@ -37,6 +59,68 @@ import Lineage.LineageOps
   * single-job-per-round optimization removed (ADVICE r9).
   */
 object Fixpoint {
+  /** Largest pair list the driver side takes. Time gives no crossover
+    * to set it from: with each side forced (`ScaleDebug loopside`,
+    * synthetic clique graphs, local[4] on 4 vCPUs) the driver side was
+    * faster at every size measured, 30k to 3M pairs (q104 18–39×, q158
+    * 11–25×, q149 2.7–4.2×, the k-core margin narrowing with size). The
+    * bound is set by driver memory instead. The driver side holds at
+    * most 48 B per pair while [[collectPairs]] indexes, then 16 B per
+    * pair and 41 B per node while a kernel iterates, then its output
+    * rows: 88 (k-core) to 176 (PPR) B per node, measured with Spark's
+    * SizeEstimator. At 500k pairs that is at most ~0.25 GB even if
+    * every pair brings two new nodes (1M nodes); real similarity graphs
+    * have far fewer nodes than pairs (sf1: 285,896 pairs, 51,708 nodes),
+    * and at the bound the synthetic graph ran all three loops on either
+    * side in a 1 GB heap. */
+  val DRIVER_MAX_PAIRS: Long = 500000L
+
+  /** The limit [[onDriver]] applies; tests bind it to force a side
+    * (-1: always distributed, Long.MaxValue: always the driver). */
+  private[graft] val driverMaxPairs =
+    new scala.util.DynamicVariable[Long](DRIVER_MAX_PAIRS)
+
+  /** The side selection described above: true when a loop input of
+    * `pairs` rows runs on the driver. Runs no action. */
+  def onDriver(pairs: Long): Boolean = pairs <= driverMaxPairs.value
+
+  /** A pair list collected for the driver side: `ids` holds the
+    * distinct endpoints in ascending order, and pair e joins nodes
+    * `a(e)` and `b(e)`, positions in `ids`. */
+  final class CollectedPairs(val ids: Array[Long], val a: Array[Int],
+      val b: Array[Int]) {
+    def size: Int = a.length
+  }
+
+  /** Collects the first two (long) columns of `pairs` once, straight
+    * from the internal rows into one primitive array per partition (no
+    * boxed Rows), and indexes the endpoints. Duplicate pairs and
+    * self-loops are kept. */
+  def collectPairs(pairs: DataFrame): CollectedPairs = {
+    val flat = Array.concat(pairs.queryExecution.toRdd.mapPartitions { rows =>
+      val out = new scala.collection.mutable.ArrayBuilder.ofLong
+      rows.foreach { r => out += r.getLong(0); out += r.getLong(1) }
+      Iterator.single(out.result())
+    }.collect().toIndexedSeq: _*) // u0 v0 u1 v1 …
+    val ids = distinctSorted(flat)
+    val a = new Array[Int](flat.length / 2)
+    val b = new Array[Int](flat.length / 2)
+    for (e <- a.indices) {
+      a(e) = java.util.Arrays.binarySearch(ids, flat(2 * e))
+      b(e) = java.util.Arrays.binarySearch(ids, flat(2 * e + 1))
+    }
+    new CollectedPairs(ids, a, b)
+  }
+
+  private def distinctSorted(xs: Array[Long]): Array[Long] = {
+    val sorted = xs.clone()
+    java.util.Arrays.sort(sorted)
+    var m = 0
+    for (x <- sorted)
+      if (m == 0 || sorted(m - 1) != x) { sorted(m) = x; m += 1 }
+    java.util.Arrays.copyOf(sorted, m)
+  }
+
   /** Timing caveat (round-10 measurement, q149): even with
     * `eager = false`, building the rebuilt frame touches `ck.rdd`, and
     * under AQE that materializes every INTERMEDIATE query stage of the
@@ -67,8 +151,8 @@ object Fixpoint {
     * q65+q102+q143 at sf0.1 (tagged bench artifacts): 19.2 s total
     * with a reset every round vs 15.0 s with plain checkpoints vs
     * ~16.2 s amortized — and q104's per-round time is 0.3–0.4 s flat
-    * through 47 rounds under the amortized form (GRAFT_PR_DEBUG),
-    * identical to the every-round-reset shape. The plain lazy
+    * through 47 rounds under the amortized form, identical to the
+    * every-round-reset shape. The plain lazy
     * `localCheckpoint` keeps the partitioning but inherits compounding
     * stats; taking it RESET_EVERY−1 rounds out of RESET_EVERY bounds
     * the stats BigInt to a trivial size while keeping the

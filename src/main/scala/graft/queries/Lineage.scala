@@ -49,6 +49,18 @@ object Lineage {
       df.checkpoint(eager)
     }
 
+  /** Row count in ONE job: an RDD count of the physical plan, where
+    * `Dataset.count` plans an aggregate whose exchange AQE runs as a job
+    * of its own. Over a lazy cut this is the materializing job. */
+  def rowCount(df: DataFrame): Long = df.queryExecution.toRdd.count()
+
+  /** An eager cut that keeps its row count: the lazy cut materialized by
+    * [[rowCount]] runs the one job an eager cut runs anyway. */
+  def cutCounted(df: DataFrame): (DataFrame, Long) = {
+    val c = cut(df, eager = false)
+    (c, rowCount(c))
+  }
+
   /** Size gate for the eager multi-consumer materializations (VERDICT
     * r16 #3): an EAGER cut of a huge base relation pays a full extra
     * materialization job before the first consumer can start — the one

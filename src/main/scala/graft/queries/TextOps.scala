@@ -1,7 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.expressions.Window
 import graft.model.Tables
 import graft.functions.SimHashAgg
@@ -2118,10 +2120,11 @@ object TextOps {
     Fixpoint.checkpointRound(out, round)
   }
 
-  /** The symmetrized graph: edge list + per-node degree/count table
-    * (symmetrizing means every node has degree ≥ 1 — no dangling-mass
-    * term). */
-  private[graft] def prGraph(pairs: DataFrame): (DataFrame, DataFrame) = {
+  /** The symmetrized graph: edge list (src, dst) + per-node table
+    * (doc_id, deg, n) — degree and node count. Symmetrizing means every
+    * node has degree ≥ 1 (no dangling-mass term) and every node is also
+    * a dst, so the step's inner join keeps the whole node set. */
+  private[graft] def prGraph(pairs: DataFrame): (DataFrame, DataFrame) =
     // EAGER checkpoint of the pair list BEFORE the symmetrizing union —
     // the r11 degreeAssortativity lesson, which this builder never got:
     // the union references `pairs` twice inside the one job that
@@ -2133,16 +2136,23 @@ object TextOps {
     // same stage of the materializing job and a lazy persist lets their
     // tasks race-compute the same source partitions (the measured
     // degreeAssortativity A/B).
-    val p = pairs.cut()
-    val edges = p.select(col("u").as("src"), col("v").as("dst"))
+    prGraphOf(pairs.cut())
+
+  /** [[prGraph]] over an already materialized pair list. */
+  private def prGraphOf(p: DataFrame): (DataFrame, DataFrame) = {
+    val edges = prEdges(p).cut(false)
+    (edges, prNodes(edges).cut(false)) // reused every round AND by the output
+  }
+
+  private def prEdges(p: DataFrame): DataFrame =
+    p.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(p.select(col("v").as("src"), col("u").as("dst")))
-      .cut(false)
+
+  private def prNodes(edges: DataFrame): DataFrame = {
     val deg0 = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val degn = deg0
+    deg0
       .crossJoin(broadcast(deg0.agg(count(lit(1)).as("n"))))
       .select(col("src").as("doc_id"), col("deg"), col("n"))
-      .cut(false) // reused every iteration AND by the output
-    (edges, degn)
   }
 
   private[graft] def prInit(degn: DataFrame): DataFrame =
@@ -2158,36 +2168,47 @@ object TextOps {
     pr
   }
 
-  /** Convergence-based damped PageRank (VERDICT r7 #6): iterate until the
-    * max quanta movement drops under the integer tolerance
-    * PR_TOL_NUM_Q div n (~0.1% of the uniform score), fail loud at
-    * PR_CAP — the Components `sig()` fixpoint discipline (1-row driver
-    * check per round, lazy localCheckpoint keeps each round one job)
-    * instead of a blind unrolled count. The stop rule is a deterministic
-    * function of the (engine-identical) integer iterates, so the DuckDB
-    * oracle reaches the SAME iteration by computing every round's delta
-    * and selecting the first one under the same integer tolerance — no
-    * recursion. An EXACT fixpoint stop would not terminate: the
-    * quantized iteration settles into a few-quanta oscillation, which
-    * is why the tolerance is relative and ≫ 1 quantum (max(1, …) guards
-    * a pathological n > PR_TOL_NUM_Q where the floor would reach 0). */
+  /** Convergence-based damped PageRank: iterate until the max quanta
+    * movement drops under the integer tolerance PR_TOL_NUM_Q div n
+    * (~0.1% of the uniform score), fail loud at PR_CAP. The stop rule is
+    * a deterministic function of the (engine-identical) integer
+    * iterates, so the DuckDB oracle reaches the SAME iteration by
+    * computing every round's delta and selecting the first one under
+    * the same integer tolerance — no recursion. An EXACT fixpoint stop
+    * would not terminate: the quantized iteration settles into a
+    * few-quanta oscillation, which is why the tolerance is relative and
+    * ≫ 1 quantum (max(1, …) guards a pathological n > PR_TOL_NUM_Q
+    * where the floor would reach 0).
+    *
+    * Side selection ([[Fixpoint.onDriver]]): the pair list is counted
+    * by the one job that materializes it; when it has at most
+    * [[Fixpoint.DRIVER_MAX_PAIRS]] rows, [[convergeCollected]] collects
+    * the pairs once and runs the identical rounds on arrays in the
+    * driver; otherwise [[converge2]] runs them as Spark jobs. */
   private[graft] def pageRankConverged(pairs: DataFrame,
       cap: Int = PR_CAP,
       unroll: Option[Int] = None): DataFrame = {
-    val (edges, degn) = prGraph(pairs)
+    val (p, np) = Lineage.cutCounted(pairs) // eager, as in prGraph
+    if (Fixpoint.onDriver(np))
+      return convergeCollected(p, prInit(prNodes(prEdges(p))).schema,
+        seeded = false, cap, "pr")
+    val (edges, degn) = prGraphOf(p)
     val nRow = degn.select(col("n")).head(1)
     val pr = prInit(degn)
     if (nRow.isEmpty) return pr // empty graph: nothing to iterate
-    val tolQ = math.max(1L, PR_TOL_NUM_Q / nRow(0).getLong(0))
-    converge2(pr, prStepBody(_, edges, degn), tolQ, cap, "pr",
-      unroll.getOrElse(convergeUnroll(pairs.sparkSession)))
+    converge2(pr, prStepBody(_, edges, degn), prTol(nRow(0).getLong(0)),
+      cap, "pr", unroll.getOrElse(convergeUnroll(pairs.sparkSession)))
   }
+
+  /** The integer stop tolerance relative to a mass scale 1/`d` quanta
+    * (q104: d = n; q158: d = |S|). */
+  private def prTol(d: Long): Long = math.max(1L, PR_TOL_NUM_Q / d)
 
   /** Rounds materialized per convergence job (round 13; was 2 since
     * round-10 session 2). The loops' cost is sequential-JOB latency,
     * not data — deeper unroll amortizes scheduling + AQE planning over
-    * more rounds. 4 measured best at sf0.1 (see converge2 scaladoc for
-    * the A/B); past that the per-job plan depth starts paying back.
+    * more rounds. 4 measured best at sf0.1; past that the per-job plan
+    * depth starts paying back.
     *
     * Configured via the Spark conf below (round 14, VERDICT r13 #4 —
     * the GRAFT_UNROLL env var was inconsistent with the layout knob
@@ -2215,37 +2236,34 @@ object TextOps {
     }
   }
 
-  /** The convergence driver, CONVERGE_UNROLL iterations per job
-    * (round-10 session 2 introduced the 2-step unroll after the closing
-    * profile put q104+q158 at ~40 s of a 216 s total — nearly all of it
-    * sequential-round latency, not data; round 13 generalized it): one
+  /** The distributed convergence loop, `unroll` rounds per job: one
     * job materializes rounds k+1 … k+s (each intermediate state is a
-    * lazy localCheckpoint inside the same DAG — its RDD computes once
-    * and both consumers of each step read the persisted partitions),
-    * and ONE action reads ALL s deltas off the carried q0…q_{s-1}
-    * columns. Stop semantics are IDENTICAL to the one-round loop — and
-    * therefore to the oracle's first-round-under-tolerance selection:
-    * deltas are checked in ROUND ORDER, so convergence at an interior
-    * round returns that round's iterate (its column is carried
-    * precisely for that). The per-job step count is clamped to
-    * cap − k, so no round past the cap is ever requested and the
-    * fail-loud cap triggers exactly where the single-step loop would
-    * have thrown (the q104 discipline). Iterates are bit-identical
-    * (same integer-quanta step body, merely composed), so the unroll
-    * is invisible to every oracle. */
+    * lazy checkpoint inside the same DAG — its RDD computes once and
+    * both consumers of each step read the persisted partitions), and
+    * ONE action reads ALL s deltas off the carried q0…q_{s-1} columns.
+    * The loops' cost is sequential-job latency, not data, so deeper
+    * unroll amortizes scheduling and AQE planning over more rounds.
+    * Stop semantics are IDENTICAL to the one-round loop — and therefore
+    * to the oracle's first-round-under-tolerance selection: deltas are
+    * checked in ROUND ORDER, so convergence at an interior round
+    * returns that round's iterate (its column is carried precisely for
+    * that). The per-job step count is clamped to cap − k, so no round
+    * past the cap is ever requested and the fail-loud cap triggers
+    * exactly where the single-step loop would have thrown. Iterates are
+    * bit-identical (same integer-quanta step body, merely composed), so
+    * the unroll is invisible to every oracle.
+    *
+    * This is the large-graph side only: graphs of at most
+    * [[Fixpoint.DRIVER_MAX_PAIRS]] pairs run [[convergeCollected]]
+    * instead (see [[Fixpoint]] for the side selection). */
   private def converge2(init: DataFrame, stepBody: DataFrame => DataFrame,
       tolQ: Long, cap: Int, tag: String, unroll: Int): DataFrame = {
     require(unroll >= 1, s"$tag: unroll must be >= 1, got $unroll")
-    val dbg = sys.env.contains("GRAFT_PR_DEBUG")
     var pr = init
     var k = 0
     var delta = Long.MaxValue
     while (delta > tolQ) {
-      if (k + 1 > cap) throw new IllegalStateException(
-        s"$tag failed to converge within $cap iterations " +
-          s"(delta=$delta quanta, tol=$tolQ) — raise the cap or loosen " +
-          "the tolerance")
-      val t0 = System.nanoTime
+      if (k + 1 > cap) throw notConverged(tag, cap, delta, tolQ)
       val steps = math.min(unroll, cap - k) // ≥ 1 by the guard
       // inter(0) = carried state (round k); inter(i), i ≥ 1 = round k+i,
       // lazily checkpointed; the round k+steps output stays in-plan (the
@@ -2272,9 +2290,6 @@ object TextOps {
       }
       val row = out.agg(aggs.head, aggs.tail: _*).head()
       val ds = (0 until steps).map(row.getLong)
-      if (dbg) println(f"[$tag] rounds ${k + 1}..${k + steps}: " +
-        s"d=${ds.mkString(",")} tol=$tolQ " +
-        f"${(System.nanoTime - t0) / 1e9}%.1f s")
       val carried = (0 until steps).map(i => s"q$i")
       val firstOk = ds.indexWhere(_ <= tolQ) // 0-based: round k+firstOk+1
       if (firstOk >= 0) {
@@ -2291,19 +2306,99 @@ object TextOps {
     pr
   }
 
+  private def notConverged(tag: String, cap: Int, delta: Long,
+      tolQ: Long): IllegalStateException = new IllegalStateException(
+    s"$tag failed to converge within $cap iterations " +
+      s"(delta=$delta quanta, tol=$tolQ) — raise the cap or loosen " +
+      "the tolerance")
+
+  private def noSeeds: IllegalStateException = new IllegalStateException(
+    s"personalized pagerank: no seed nodes (doc_id % $PPR_SEED_MOD == 0) " +
+      "in the similarity graph — the teleport vector is undefined")
+
+  /** The small-graph side of pagerank (`seeded = false`) and PPR
+    * (`seeded = true`): collect the materialized pair list once and run
+    * [[converge2]]'s one-step loop on primitive arrays in the driver.
+    * Every value is the distributed side's, bit for bit:
+    *  - edges are both orientations of every pair (prGraph's union);
+    *    nodes are the distinct srcs (the degree table's rows), deg is
+    *    the src's edge multiplicity, n the node count, and for PPR
+    *    seed = (doc_id ≡ 0 mod PPR_SEED_MOD), ns = Σ seed;
+    *  - an empty graph returns no rows, a seedless PPR graph throws;
+    *  - a round is sc(x) = Σ over edges y→x of q(y) div deg(y), then
+    *    q'(x) = teleport(x) + (17·sc(x)) div 20 with teleport
+    *    PR_TELEPORT_Q div n (pagerank) or, on seeds only,
+    *    PR_TELEPORT_Q div ns (PPR). Every node is a dst of the
+    *    symmetrized list, so pagerank's inner join and PPR's
+    *    left join + coalesce both keep every node;
+    *  - the stop is the first round whose max |q' − q| ≤ the tolerance,
+    *    and the cap throws the same exception as converge2.
+    * Total mass stays ≤ PR_Q, so no sum or product here can overflow.
+    * Returns a LocalRelation with `schema`, the distributed init
+    * frame's: (doc_id, deg, n, q), or (doc_id, deg, n, seed, ns, q). */
+  private def convergeCollected(p: DataFrame, schema: StructType,
+      seeded: Boolean, cap: Int, tag: String): DataFrame = {
+    val g = Fixpoint.collectPairs(p.select("u", "v"))
+    val ids = g.ids
+    val deg = new Array[Long](ids.length)
+    for (e <- 0 until g.size) { deg(g.a(e)) += 1; deg(g.b(e)) += 1 }
+    val n = ids.length.toLong
+    val seed = ids.map(id => seeded && id % PPR_SEED_MOD == 0)
+    val ns = seed.count(identity).toLong
+    def iterate(init: Array[Long], teleport: Int => Long,
+        tolQ: Long): Array[Long] = {
+      var q = init
+      var next = new Array[Long](ids.length)
+      val sc = new Array[Long](ids.length)
+      var k = 0
+      var delta = Long.MaxValue
+      while (delta > tolQ) {
+        if (k + 1 > cap) throw notConverged(tag, cap, delta, tolQ)
+        java.util.Arrays.fill(sc, 0L)
+        var e = 0
+        while (e < g.size) { // both orientations of pair e
+          val x = g.a(e); val y = g.b(e)
+          sc(y) += q(x) / deg(x); sc(x) += q(y) / deg(y)
+          e += 1
+        }
+        delta = 0L
+        var x = 0
+        while (x < ids.length) {
+          next(x) = teleport(x) + 17 * sc(x) / 20
+          delta = math.max(delta, math.abs(next(x) - q(x)))
+          x += 1
+        }
+        val t = q; q = next; next = t
+        k += 1
+      }
+      q
+    }
+    val q =
+      if (n == 0) Array.empty[Long] // empty graph: nothing to iterate
+      else if (seeded) {
+        if (ns == 0) throw noSeeds
+        iterate(seed.map(if (_) PR_Q / ns else 0L),
+          x => if (seed(x)) PR_TELEPORT_Q / ns else 0L, prTol(ns))
+      } else iterate(Array.fill(ids.length)(PR_Q / n),
+        _ => PR_TELEPORT_Q / n, prTol(n))
+    val out = ids.indices.map { x =>
+      if (seeded) Row(ids(x), deg(x), n, if (seed(x)) 1L else 0L, ns, q(x))
+      else Row(ids(x), deg(x), n, q(x))
+    }
+    p.sparkSession.createDataFrame(out.asJava, schema)
+  }
+
   /** q158: the PPR node table — prGraph's degn extended with the seed
-    * indicator and the (broadcast) seed count. Fails loud on a seedless
-    * graph: with |S| = 0 the teleport vector is undefined, and silently
-    * returning the all-zero fixpoint would look like a result. */
-  private def pprGraph(pairs: DataFrame): (DataFrame, DataFrame) = {
-    val (edges, degn) = prGraph(pairs)
+    * indicator and the (broadcast) seed count. */
+  private def pprNodes(degn: DataFrame): DataFrame = {
     val seeded = degn.withColumn("seed",
       (pmod(col("doc_id"), lit(PPR_SEED_MOD)) === 0).cast("long"))
-    val degns = seeded
-      .crossJoin(broadcast(seeded.agg(sum("seed").as("ns"))))
-      .cut(false) // reused every round AND by the output
-    (edges, degns)
+    seeded.crossJoin(broadcast(seeded.agg(sum("seed").as("ns"))))
   }
+
+  private def pprInit(degns: DataFrame): DataFrame =
+    degns.select(col("doc_id"), col("deg"), col("n"), col("seed"), col("ns"),
+      expr(s"CASE WHEN seed = 1 THEN $PR_Q div ns ELSE 0L END").as("q"))
 
   /** One PPR iteration in the q104 integer quanta: teleport mass lands
     * ONLY on seeds ((0.15·10¹²) div |S| each); the contribution term is
@@ -2324,33 +2419,38 @@ object TextOps {
           + expr("(17 * coalesce(sc, 0L)) div 20")).as("q"))
   }
 
-  /** Convergence-based PPR — q104's loop discipline verbatim (carried
-    * prev, one action per round, amortized checkpoint stats reset,
-    * fail-loud cap), over the seeded teleport vector. */
+  /** Convergence-based PPR — q104's loop verbatim (same stop rule,
+    * fail-loud cap and side selection: [[convergeCollected]] on a small
+    * graph, [[converge2]] otherwise), over the seeded teleport vector.
+    * Fails loud on a seedless graph: with |S| = 0 the teleport vector is
+    * undefined, and silently returning the all-zero fixpoint would look
+    * like a result.
+    *
+    * The tolerance is relative to the PER-SEED mass scale 1/|S|, not
+    * q104's uniform 1/n: PPR scores concentrate near the seed set (a
+    * typical seed holds ~0.15/|S| at the fixpoint), so 1/n-relative
+    * stopping would demand |S|/n× more precision than the scores carry
+    * — and since Δ₀ ≈ 1/|S| too, it would cost ~log(n/|S|)/log(1/0.85)
+    * EXTRA rounds at every scale (measured: 57 rounds vs 42 at sf0.01;
+    * ~99 — past any reasonable cap — at sf1's n/|S| ≈ 10 with n = 52k).
+    * 1/|S|-relative keeps both the relative precision AND the round
+    * count scale-stable (mixing-bound, like q104's). */
   private[graft] def pprConverged(pairs: DataFrame,
       cap: Int = PPR_CAP,
       unroll: Option[Int] = None): DataFrame = {
-    val (edges, degns) = pprGraph(pairs)
-    val head = degns.select(col("n"), col("ns")).head(1)
-    val pr = degns.select(col("doc_id"), col("deg"), col("n"),
-      col("seed"), col("ns"),
-      expr(s"CASE WHEN seed = 1 THEN $PR_Q div ns ELSE 0L END").as("q"))
+    val (p, np) = Lineage.cutCounted(pairs) // eager, as in prGraph
+    if (Fixpoint.onDriver(np))
+      return convergeCollected(p,
+        pprInit(pprNodes(prNodes(prEdges(p)))).schema, seeded = true,
+        cap, "ppr")
+    val (edges, degn) = prGraphOf(p)
+    val degns = pprNodes(degn).cut(false) // reused every round AND by the output
+    val head = degns.select(col("ns")).head(1)
+    val pr = pprInit(degns)
     if (head.isEmpty) return pr // empty graph: nothing to iterate
-    if (head(0).getLong(1) == 0L) throw new IllegalStateException(
-      s"personalized pagerank: no seed nodes (doc_id % $PPR_SEED_MOD == 0) " +
-        "in the similarity graph — the teleport vector is undefined")
-    // Tolerance relative to the PER-SEED mass scale 1/|S|, not q104's
-    // uniform 1/n: PPR scores concentrate near the seed set (a typical
-    // seed holds ~0.15/|S| at the fixpoint), so 1/n-relative stopping
-    // would demand |S|/n× more precision than the scores carry — and
-    // since Δ₀ ≈ 1/|S| too, it would cost ~log(n/|S|)/log(1/0.85) EXTRA
-    // rounds at every scale (measured: 57 rounds vs 42 at sf0.01; ~99 —
-    // past any reasonable cap — at sf1's n/|S| ≈ 10 with n = 52k).
-    // 1/|S|-relative keeps both the relative precision AND the round
-    // count scale-stable (mixing-bound, like q104's).
-    val tolQ = math.max(1L, PR_TOL_NUM_Q / head(0).getLong(1))
-    converge2(pr, pprStepBody(_, edges, degns), tolQ, cap, "ppr",
-      unroll.getOrElse(convergeUnroll(pairs.sparkSession)))
+    if (head(0).getLong(0) == 0L) throw noSeeds
+    converge2(pr, pprStepBody(_, edges, degns), prTol(head(0).getLong(0)),
+      cap, "ppr", unroll.getOrElse(convergeUnroll(pairs.sparkSession)))
   }
 
   /** q29/q65 shared CTE chain: df-capped exact-Jaccard pairs, ending in

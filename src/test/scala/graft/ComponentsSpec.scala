@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.Components
 
@@ -15,6 +16,13 @@ class ComponentsSpec extends AnyFunSuite {
   private def pathEdges = {
     import s.implicits._
     (0L until 30L).map(i => (i, i + 1)).toDF("u", "v")
+  }
+
+  /** kCore on one side of the driver gate, as a (doc_id → core_deg) map. */
+  private def kCoreOn(maxPairs: Long, edges: DataFrame, k: Int,
+      cap: Int = 30): Map[Long, Long] = TestSpark.onSide(maxPairs) {
+    Components.kCore(edges, k, cap)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 
   test("naive min-label propagation fails loudly past its round cap") {
@@ -85,10 +93,9 @@ class ComponentsSpec extends AnyFunSuite {
       (7L, 7L),                                  // self-loop
       (30L, 31L)                                 // isolated edge → peels
     ).toDF("u", "v")
-    val got = Components.kCore(edges, 2, cap = 30)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(1L -> 2L, 2L -> 2L, 3L -> 2L,
-      20L -> 2L, 21L -> 2L, 22L -> 2L, 23L -> 2L))
+    for ((side, maxPairs) <- TestSpark.LOOP_SIDES)
+      assert(kCoreOn(maxPairs, edges, 2) === Map(1L -> 2L, 2L -> 2L,
+        3L -> 2L, 20L -> 2L, 21L -> 2L, 22L -> 2L, 23L -> 2L), side)
   }
 
   test("k=3 core: the attached triangle peels, K4 survives exactly") {
@@ -100,9 +107,9 @@ class ComponentsSpec extends AnyFunSuite {
       (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
       (4L, 5L), (4L, 6L), (5L, 6L)
     ).toDF("u", "v")
-    val got = Components.kCore(edges, 3, cap = 30)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
+    for ((side, maxPairs) <- TestSpark.LOOP_SIDES)
+      assert(kCoreOn(maxPairs, edges, 3) ===
+        Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L), side)
   }
 
   test("k-core matches local peeling on the seeded hot-hub graph, and " +
@@ -114,8 +121,6 @@ class ComponentsSpec extends AnyFunSuite {
       u <- 0 until n; v <- (u + 1) until n
       if rnd.nextDouble() < 0.08 || (u == 0 && v % 3 == 0)
     } yield (u.toLong, v.toLong)).distinct
-    val got = Components.kCore(base.toDF("u", "v"), 3, cap = 30)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // local reference: same parallel peel, plain Scala
     var es = base
     var changed = true
@@ -130,7 +135,8 @@ class ComponentsSpec extends AnyFunSuite {
     val want = es.flatMap(e => Seq(e._1, e._2))
       .groupBy(identity).map { case (x, l) => x -> l.size.toLong }
     assert(want.nonEmpty, "seeded graph unexpectedly has an empty 3-core")
-    assert(got === want)
+    for ((side, maxPairs) <- TestSpark.LOOP_SIDES)
+      assert(kCoreOn(maxPairs, base.toDF("u", "v"), 3) === want, side)
   }
 
   test("k-core fails loudly past the round cap instead of returning a " +
@@ -138,10 +144,19 @@ class ComponentsSpec extends AnyFunSuite {
     import s.implicits._
     // a 13-node path peels from both ends: ~6 rounds at k=2, cap 2 trips
     val chain = (0L until 12L).map(i => (i, i + 1)).toDF("u", "v")
-    val e = intercept[IllegalArgumentException] {
-      Components.kCore(chain, 2, cap = 2).collect()
+    def peels(maxPairs: Long, cap: Int): Boolean =
+      try { kCoreOn(maxPairs, chain, 2, cap); true }
+      catch { case e: IllegalArgumentException =>
+        assert(e.getMessage.contains(s"still peeling after $cap rounds"))
+        false
+      }
+    // both sides: the same lowest successful cap (peel depth plus the
+    // confirming round), and the same exception at every cap below it
+    val lowest = TestSpark.LOOP_SIDES.map { case (side, maxPairs) =>
+      side -> (1 to 30).find(peels(maxPairs, _)).get
     }
-    assert(e.getMessage.contains("still peeling"))
+    assert(lowest.map(_._2).distinct.size === 1, s"lowest caps $lowest")
+    assert(lowest.head._2 > 2, "the 13-node path must need more than 2 rounds")
   }
 
   test("triangle counts match a local brute-force census on a seeded " +

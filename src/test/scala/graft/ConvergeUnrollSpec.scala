@@ -16,7 +16,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * joined at 1—20 — converges in enough rounds (>8) that every unroll
   * in 1..5 exercises both interior and final-iterate stops across jobs,
   * and includes a second seed (20) so PPR's teleport split is
-  * non-trivial. */
+  * non-trivial.
+  *
+  * The unroll exists only on the distributed side, so every run here
+  * forces that side (by default this graph would take the driver side
+  * and the unroll would go untested). The cap-boundary test adds the
+  * driver side as one more arm. */
 class ConvergeUnrollSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
 
@@ -24,18 +29,26 @@ class ConvergeUnrollSpec extends AnyFunSuite {
     (10L, 1L), (1L, 2L), (2L, 3L),
     (1L, 20L), (20L, 21L), (21L, 22L), (22L, 23L), (23L, 24L), (24L, 20L))
 
-  private def prAt(unroll: Int, cap: Int = 200): Map[Long, Long] = {
+  private val DISTRIBUTED = -1L
+
+  private def prAt(unroll: Int, cap: Int = 200,
+      maxPairs: Long = DISTRIBUTED): Map[Long, Long] = {
     import s.implicits._
-    queries.TextOps.pageRankConverged(pairs.toDF("u", "v"), cap, Some(unroll))
-      .select("doc_id", "q").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    TestSpark.onSide(maxPairs) {
+      queries.TextOps.pageRankConverged(pairs.toDF("u", "v"), cap,
+          Some(unroll))
+        .select("doc_id", "q").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
   }
 
   private def pprAt(unroll: Int, cap: Int = 200): Map[Long, Long] = {
     import s.implicits._
-    queries.TextOps.pprConverged(pairs.toDF("u", "v"), cap, Some(unroll))
-      .select("doc_id", "q").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    TestSpark.onSide(DISTRIBUTED) {
+      queries.TextOps.pprConverged(pairs.toDF("u", "v"), cap, Some(unroll))
+        .select("doc_id", "q").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
   }
 
   /** The conf-configured path (round 14: GRAFT_UNROLL env →
@@ -43,17 +56,12 @@ class ConvergeUnrollSpec extends AnyFunSuite {
     * UNSET (callers pass no unroll, the default-4 path). */
   private def prViaConf(conf: Option[String]): Map[Long, Long] = {
     import s.implicits._
-    val key = queries.TextOps.CONVERGE_UNROLL_KEY
-    val saved = s.conf.getOption(key)
-    try {
-      conf match { case Some(v) => s.conf.set(key, v)
-                   case None => s.conf.unset(key) }
-      queries.TextOps.pageRankConverged(pairs.toDF("u", "v"))
-        .select("doc_id", "q").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    } finally {
-      saved match { case Some(v) => s.conf.set(key, v)
-                    case None => s.conf.unset(key) }
+    TestSpark.withConf(queries.TextOps.CONVERGE_UNROLL_KEY, conf) {
+      TestSpark.onSide(DISTRIBUTED) {
+        queries.TextOps.pageRankConverged(pairs.toDF("u", "v"))
+          .select("doc_id", "q").collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      }
     }
   }
 
@@ -94,11 +102,19 @@ class ConvergeUnrollSpec extends AnyFunSuite {
     // The search starts at 9, so prove caps below it really fail: the
     // fixture must span multiple 4-round jobs for the test to bite.
     intercept[IllegalStateException](prAt(1, 8))
+    // the driver side is one more arm: same result at the lowest cap,
+    // and the same exception, message included, one below it
+    val driver = TestSpark.LOOP_SIDES.head._2
+    assert(prAt(1, converged, driver) === full, "driver side diverged")
+    val capMsg = intercept[IllegalStateException](
+      prAt(1, converged - 1, driver)).getMessage
+    assert(capMsg.contains(s"within ${converged - 1} iterations"),
+      s"driver side threw the wrong cap message: $capMsg")
     for (u <- 1 to 5) {
       assert(prAt(u, converged) === full,
         s"unroll=$u at cap=$converged should converge to the same result")
       val e = intercept[IllegalStateException](prAt(u, converged - 1))
-      assert(e.getMessage.contains(s"within ${converged - 1} iterations"),
+      assert(e.getMessage === capMsg,
         s"unroll=$u threw the wrong cap message")
     }
   }

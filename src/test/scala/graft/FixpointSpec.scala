@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.queries.Fixpoint
+import graft.queries.{Components, Fixpoint, TextOps}
 
 /** Pins the Fixpoint.checkpointFresh contract that q104 (pagerank), q65
   * (star contraction), and q143 (BPE training) rely on: a loop that
@@ -16,7 +18,10 @@ import graft.queries.Fixpoint
   * default stats, so the estimate is a round-independent constant.
   *
   * The assertion is on the stats BigInt itself (deterministic), not on
-  * wall-clock — the digit count IS the planning-time driver. */
+  * wall-clock — the digit count IS the planning-time driver.
+  *
+  * Also pins `Fixpoint.onDriver`, the side selection of the pagerank,
+  * PPR and k-core loops, on the plan leaf each side returns. */
 class FixpointSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
 
@@ -128,5 +133,37 @@ class FixpointSpec extends AnyFunSuite {
     val got = st.orderBy("u").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.length == 128 - rounds)
     assert(got.forall { case (u, v) => v == u + rounds + 1 })
+  }
+
+  test("side selection: a LocalRelation at or under the driver pair " +
+      "limit, a LogicalRDD above it or when it is -1") {
+    import s.implicits._
+    // a path into a 5-cycle with two seeds (10, 20): 9 pairs, which is
+    // also k-core's normalized edge count
+    val pairs = Seq((10L, 1L), (1L, 2L), (2L, 3L), (1L, 20L), (20L, 21L),
+      (21L, 22L), (22L, 23L), (23L, 24L), (24L, 20L)).toDF("u", "v")
+    val rows = 9L
+    val loops: Seq[(String, () => DataFrame)] = Seq(
+      "kCore" -> (() => Components.kCore(pairs, 2, 30)),
+      "pageRankConverged" -> (() => TextOps.pageRankConverged(pairs)),
+      "pprConverged" -> (() => TextOps.pprConverged(pairs)))
+    for ((name, loop) <- loops) {
+      def at(limit: Long) = TestSpark.onSide(limit)(loop())
+      def leaves(df: DataFrame) = df.queryExecution.analyzed.collectLeaves()
+      for (t <- Seq(rows, rows + 1)) {
+        val l = leaves(at(t))
+        assert(l.nonEmpty && l.forall(_.isInstanceOf[LocalRelation]),
+          s"$name at limit $t: $l")
+      }
+      for (t <- Seq(rows - 1, 0L, -1L)) {
+        val l = leaves(at(t))
+        assert(l.nonEmpty && l.forall(_.isInstanceOf[LogicalRDD]),
+          s"$name at limit $t: $l")
+      }
+      // unbound, the limit is DRIVER_MAX_PAIRS
+      assert(leaves(loop()).forall(_.isInstanceOf[LocalRelation]), name)
+      // same columns, types and nullability on both sides
+      assert(at(rows).schema === at(-1L).schema, name)
+    }
   }
 }

@@ -40,9 +40,7 @@ class PartitionInvarianceSpec extends AnyFunSuite {
     "q137_hll_sliding",
     "q101_source_mix_resample",
     "q102_cluster_safe_split",
-    // late r6: decimal-pinned PageRank sums and the A-ES weighted ranks
-    // must not depend on summation/merge order
-    "q104_pagerank",
+    // late r6: the A-ES weighted ranks must not depend on merge order
     "q107_weighted_sample",
     // the broadcast as-of rebuilds its (ts, tie)-sorted index per TASK
     // from broadcast rows whose arrival order the layout controls — the
@@ -71,27 +69,46 @@ class PartitionInvarianceSpec extends AnyFunSuite {
     "q127_gap_fill",
     "q128_ewma")
 
+  /** The graph loops (integer-quanta pagerank and PPR sums, k-core's
+    * edge-count fixpoint) run on one of two sides, picked by
+    * queries.Fixpoint.onDriver. Both sides must be layout-free, and they
+    * must agree with each other. */
+  private val LOOP_QUERIES = Seq(
+    "q104_pagerank", "q149_kcore", "q158_personalized_pagerank")
+
   private def run(name: String): Array[Row] =
     SparkEntry.queries(name)(s, sfDir).collect()
 
-  test("partition layout does not change any partition-sensitive query") {
-    val conf = s.conf
-    val prevBytes = conf.get("spark.sql.files.maxPartitionBytes", "128MB")
-    val prevShuffle = conf.get("spark.sql.shuffle.partitions")
-    val baseline = QUERIES.map(q => q -> run(q)).toMap
-    try {
-      // ~64 KB splits shatter even sf0.001 parquet into many input
-      // partitions; 7 is co-prime to the default 4 so every shuffle
-      // re-buckets differently
-      conf.set("spark.sql.files.maxPartitionBytes", "65536")
-      conf.set("spark.sql.shuffle.partitions", "7")
-      QUERIES.foreach { q =>
-        assert(run(q).toSeq === baseline(q).toSeq,
+  /** Runs `body` with the input split into many tiny file partitions and
+    * a co-prime shuffle partition count. */
+  private def shattered[T](body: => T): T =
+    // ~64 KB splits shatter even sf0.001 parquet into many input
+    // partitions; 7 is co-prime to the default 4 so every shuffle
+    // re-buckets differently
+    TestSpark.withConf("spark.sql.files.maxPartitionBytes", Some("65536")) {
+      TestSpark.withConf("spark.sql.shuffle.partitions", Some("7"))(body)
+    }
+
+  private def assertLayoutFree(queries: Seq[String]): Map[String, Seq[Row]] = {
+    val baseline = queries.map(q => q -> run(q).toSeq).toMap
+    shattered {
+      queries.foreach { q =>
+        assert(run(q).toSeq === baseline(q),
           s"$q changed under a different partition layout")
       }
-    } finally {
-      conf.set("spark.sql.files.maxPartitionBytes", prevBytes)
-      conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
+    baseline
+  }
+
+  test("partition layout does not change any partition-sensitive query") {
+    assertLayoutFree(QUERIES)
+    val bySide = TestSpark.LOOP_SIDES.map { case (side, maxPairs) =>
+      side -> TestSpark.onSide(maxPairs)(assertLayoutFree(LOOP_QUERIES))
+    }
+    for (q <- LOOP_QUERIES) {
+      assert(bySide.head._2(q).nonEmpty, s"$q is empty at $sfDir")
+      assert(bySide.map(_._2(q)).distinct.size === 1,
+        s"$q differs between the sides")
     }
   }
 }

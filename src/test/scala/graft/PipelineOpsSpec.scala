@@ -87,13 +87,23 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("q104: probability mass is conserved across iterations") {
-    val out = TextOps.queries("q104_pagerank")(s, "/root/testdata/sf0.01")
-      .agg(sum("pr")).head().getDouble(0)
     // integer floor-division quanta (10⁻¹²): each contribution and the
     // teleport term each drop < 1 quantum to the floor, so per round the
     // mass deficit is ≤ (Σdeg + n)·1e-12 — far under 1e-6 over ≤ PR_CAP
-    // rounds at test scale (mass only ever LEAKS, never inflates)
-    assert(math.abs(out - 1.0) < 1e-6, s"total pr mass $out")
+    // rounds at test scale (mass only ever LEAKS, never inflates). Both
+    // sides of the driver gate must agree to the bit.
+    val sf001 = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.01").toString
+    val prs = TestSpark.LOOP_SIDES.map { case (side, maxPairs) =>
+      val pr = TestSpark.onSide(maxPairs) {
+        TextOps.queries("q104_pagerank")(s, sf001)
+          .select("doc_id", "pr").collect()
+          .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      }
+      val out = pr.values.sum
+      assert(math.abs(out - 1.0) < 1e-6, s"$side: total pr mass $out")
+      pr
+    }
+    assert(prs.distinct.size === 1, "the two sides disagree")
   }
 
   // --- q105 cohort retention -----------------------------------------

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** q158 personalized PageRank: the integer-quanta iteration pinned
   * against an independent BigInt model on a paper-checkable hand graph
   * (the PipelineOpsSpec discipline for q104), plus the seedless
-  * fail-loud contract.
+  * fail-loud contract — each on both sides of the driver gate.
   */
 class PprSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
@@ -47,11 +47,16 @@ class PprSpec extends AnyFunSuite {
   test("pprConverged matches the BigInt model on the hand graph") {
     import s.implicits._
     val df = pairs.toDF("u", "v")
-    val got = queries.TextOps.pprConverged(df)
-      .select("doc_id", "q").collect()
-      .map(r => r.getLong(0) -> BigInt(r.getLong(1))).toMap
     val want = localPpr(pairs)
-    assert(got === want)
+    val got = TestSpark.LOOP_SIDES.map { case (side, maxPairs) =>
+      val q = TestSpark.onSide(maxPairs) {
+        queries.TextOps.pprConverged(df)
+          .select("doc_id", "q").collect()
+          .map(r => r.getLong(0) -> BigInt(r.getLong(1))).toMap
+      }
+      assert(q === want, side)
+      q
+    }.head
     // Shape sanity: mass decays with DISTANCE beyond the seed's
     // neighborhood (2 is closer than 3), and the frontier was reached.
     // Deliberately NOT asserting seed > neighbor: the degree-1 seed
@@ -64,9 +69,11 @@ class PprSpec extends AnyFunSuite {
   test("a seedless graph fails loud, not all-zero") {
     import s.implicits._
     val df = Seq((1L, 2L), (2L, 3L)).toDF("u", "v")
-    val e = intercept[IllegalStateException] {
-      queries.TextOps.pprConverged(df).collect()
+    for ((side, maxPairs) <- TestSpark.LOOP_SIDES) {
+      val e = intercept[IllegalStateException] {
+        TestSpark.onSide(maxPairs)(queries.TextOps.pprConverged(df).collect())
+      }
+      assert(e.getMessage.contains("no seed nodes"), side)
     }
-    assert(e.getMessage.contains("no seed nodes"))
   }
 }

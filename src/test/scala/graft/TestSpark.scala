@@ -17,4 +17,22 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Runs `body` with `key` set to `value` (None = unset), restoring the
+    * previous setting afterwards. */
+  def withConf[T](key: String, value: Option[String])(body: => T): T = {
+    val saved = spark.conf.getOption(key)
+    value.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    try body
+    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** The two sides of the small-graph loops (pagerank, PPR, k-core;
+    * queries.Fixpoint.onDriver), each forced by binding the driver
+    * side's pair limit. */
+  val LOOP_SIDES: Seq[(String, Long)] =
+    Seq("driver" -> Long.MaxValue, "distributed" -> -1L)
+
+  def onSide[T](maxPairs: Long)(body: => T): T =
+    queries.Fixpoint.driverMaxPairs.withValue(maxPairs)(body)
 }

@@ -3,6 +3,11 @@
 # checkpointRound, commit 69e5066) vs current main, interleaved
 # A B A B A B so host drift cancels. Each run = one fresh JVM of
 # Bench's min-of->=3-samples protocol on q104 only.
+# On trees with the small-graph driver side (Fixpoint.onDriver), q104
+# runs the distributed Fixpoint/unroll path only on pair lists larger
+# than Fixpoint.DRIVER_MAX_PAIRS; every shipped sf (sf0.1: 490 pairs,
+# sf1: ~286k) is below it, so there the B side measures the driver
+# kernel, not the distributed loop.
 # Usage: tools/ab_q104.sh <r13-tree> <main-tree> <out-prefix> [sfdir]
 set -e
 A="$1"; B="$2"; PREFIX="$3"; SFDIR="${4:-/root/testdata/sf0.1}"
